@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators._util import scoped_persist
-from .distance import as_double, cosine_distance
+from .distance import as_double, cosine_distance, dlit_array
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -38,9 +38,8 @@ def signature_bits(vec_col, planes: list[list[float]]):
     """array<int> of sign bits, one per hyperplane — pure Column expr."""
     cols = []
     for p in planes:
-        plane_lit = F.array(*[F.lit(float(x)) for x in p])
         dot = F.aggregate(
-            F.zip_with(vec_col, plane_lit, lambda x, y: x * y),
+            F.zip_with(vec_col, dlit_array(p), lambda x, y: x * y),
             F.lit(0.0),
             lambda a, x: a + x,
         )

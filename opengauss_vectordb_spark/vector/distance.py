@@ -36,8 +36,18 @@ def dlit_array(values) -> Column:
     double Literals (repr() is shortest round-trip, the same value the
     lit() path boxes), which ConstantFolding collapses to a single array
     Literal either way."""
-    body = ",".join(repr(float(x)) + "D" for x in values)
-    return F.expr(f"array({body})")
+    return F.expr(dlit_sql(values))
+
+
+def dlit_sql(values) -> str:
+    """SQL text of the array<double> literal ``dlit_array`` parses."""
+    return "array(" + ",".join(repr(float(x)) + "D" for x in values) + ")"
+
+
+def llit_sql(values) -> str:
+    """SQL text of an array<bigint> literal (packed bit-vector words) —
+    ``F.expr`` of it is the one-py4j-call twin of ``dlit_array``."""
+    return "array(" + ",".join(f"{int(x)}L" for x in values) + ")"
 
 
 def _fold_sum(arr: Column) -> Column:

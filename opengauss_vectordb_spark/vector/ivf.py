@@ -15,9 +15,12 @@ Spark-first design for 100 TB:
   * centroid fit runs on a bounded sample (the reference trains on
     ~50·lists sampled rows too — `ivfbuild.cpp`), k-means++ seeded Lloyd
     in numpy on the driver; the EXPENSIVE step — labeling every row — is
-    a pure Catalyst expression (broadcast centroid literal + argmin over
-    transform()), whole-stage codegen'd, zero shuffle, no Python in the
-    row path.
+    a pure Catalyst expression (broadcast centroid literal, one
+    transform() of centroid distances, one aggregate() pass for the
+    nearest list and the spill runner-up: O(lists·dim) per row, the
+    reference's cost), whole-stage codegen'd, zero shuffle, no Python
+    in the row path. The tie and spill rule is stated once, on
+    assign_lists_expr.
   * the labeled table is written `partitionBy(list_id)` so a probed
     search is *partition pruning*: Spark reads only `probes`/`lists` of
     the data from disk. That is the distributed analogue of the
@@ -41,7 +44,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .distance import DISTANCES, as_double
+from .distance import DISTANCES, as_double, dlit_sql, llit_sql
 from .exact import knn as exact_knn
 
 DEFAULT_LISTS = 100  # ivfflat.h:43
@@ -109,6 +112,13 @@ def _kmeans_once(
     return C
 
 
+def _matrix_lit(rows, row_sql) -> Column:
+    """Nested array literal of a matrix in ONE py4j call (each row
+    rendered by ``row_sql``, as ``distance.dlit_array`` does for one
+    vector); ConstantFolding collapses it to a single plan Literal."""
+    return F.expr("array(" + ",".join(row_sql(r) for r in rows) + ")")
+
+
 def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     """array<double> of distance(vec, centroid_j) for every centroid, as a
     pure Catalyst expression: the centroid matrix is a nested array
@@ -122,12 +132,8 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     per word, a pure JVM integer kernel (bit_hamming_ops,
     bitutils.cpp)."""
     if metric == "hamming":
-        cents_words = F.array(
-            *[F.array(*[F.lit(int(x)).cast("long") for x in c])
-              for c in centroids]
-        )
         return F.transform(
-            cents_words,
+            _matrix_lit(centroids, llit_sql),
             lambda c: F.aggregate(
                 F.zip_with(
                     vec, c,
@@ -137,9 +143,7 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
                 lambda a, x: a + x,
             ),
         )
-    cents_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
+    cents_lit = _matrix_lit(centroids, dlit_sql)
     if metric == "cosine":
         norm = F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0),
                                   lambda a, x: a + x))
@@ -168,26 +172,72 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     return dists
 
 
+def _nearest_two(acc: Column, d: Column) -> Column:
+    """Fold step of assign_lists_expr: acc = (i, d1, i1, d2, i2) holds the
+    next element index, the best distance and its first index, and the
+    runner-up (least distance strictly above d1) and its first index.
+    NULL distances are skipped."""
+    i, d1, i1, d2, i2 = (acc[f] for f in ("i", "d1", "i1", "d2", "i2"))
+    best = d.isNotNull() & (d1.isNull() | (d < d1))
+    second = ~best & (d > d1) & (d2.isNull() | (d < d2))
+    return F.struct(
+        (i + 1).alias("i"),
+        F.when(best, d).otherwise(d1).alias("d1"),
+        F.when(best, i).otherwise(i1).alias("i1"),
+        # a new best demotes the old one: every earlier distance is ≥ it
+        F.when(best, d1).when(second, d).otherwise(d2).alias("d2"),
+        F.when(best, i1).when(second, i).otherwise(i2).alias("i2"),
+    )
+
+
 def assign_lists_expr(
     vec: Column, centroids: np.ndarray, metric: str, spill_epsilon: float
 ) -> Column:
-    """array<int> of list assignments: the nearest centroid, plus the
-    runner-up when it is within `spill_epsilon` × the best distance
-    ("spill" / multi-assignment — boundary vectors live in both inverted
-    lists, a standard IVF recall hardener; +10-20% storage at ε≈1.4 on
-    squared-L2, recall@probes=1 +5-7 pts). spill_epsilon=1.0 disables."""
-    dists = _centroid_dists(vec, centroids, metric)
-    m1 = F.array_min(dists)
-    primary = (F.array_position(dists, m1) - 1).cast("int")
-    if spill_epsilon <= 1.0:
-        return F.array(primary)
-    rest = F.filter(dists, lambda x: x > m1)
-    m2 = F.array_min(rest)
-    secondary = (F.array_position(dists, m2) - 1).cast("int")
-    return F.when(
-        m2.isNotNull() & (m2 <= F.lit(float(spill_epsilon)) * m1),
-        F.array(primary, secondary),
-    ).otherwise(F.array(primary))
+    """array<int> of list assignments, in one pass over the row's
+    centroid distances — O(lists·dim) per row.
+
+    * primary: the lowest index among the minimum distances;
+    * runner-up: the first index among distances strictly greater than
+      the minimum; it is added ("spill" / multi-assignment — boundary
+      vectors live in both inverted lists, a standard IVF recall
+      hardener; +10-20% storage at ε≈1.4 on squared-L2, recall@probes=1
+      +5-7 pts) when it is ≤ ``spill_epsilon`` × the best distance.
+      spill_epsilon=1.0 disables.
+
+    NULL distances are ignored; a row whose distances are all NULL (a
+    zero-norm vector under cosine, a vector with a NULL element) gets
+    ``[NULL]``."""
+    null = F.lit(None)
+    zero = F.struct(
+        F.lit(0).alias("i"),
+        null.cast("double").alias("d1"),
+        null.cast("int").alias("i1"),
+        null.cast("double").alias("d2"),
+        null.cast("int").alias("i2"),
+    )
+
+    def finish(acc: Column) -> Column:
+        primary = F.array(acc["i1"])
+        if spill_epsilon <= 1.0:
+            return primary
+        return F.when(
+            acc["d2"].isNotNull()
+            & (acc["d2"] <= F.lit(float(spill_epsilon)) * acc["d1"]),
+            F.array(acc["i1"], acc["i2"]),
+        ).otherwise(primary)
+
+    return F.aggregate(
+        _centroid_dists(vec, centroids, metric), zero, _nearest_two, finish
+    )
+
+
+def label_column(vec_col: str, metric: str) -> Column:
+    """The vector as assign_lists_expr labels it: hamming operates on the
+    packed bigint words directly (a double cast would break the XOR
+    kernel); float metrics accumulate in double."""
+    if metric == "hamming":
+        return F.col(vec_col).cast("array<bigint>")
+    return as_double(F.col(vec_col))
 
 
 _BITS_PER_WORD = 32  # binary_quantize_words payload bits per bigint word
@@ -249,22 +299,23 @@ class IvfIndex:
         idx = IvfIndex(path, metric=metric, lists=lists)
         clean = df.filter(F.col(vec_col).isNotNull())
 
-        first = clean.select(F.size(F.col(vec_col)).alias("d")).first()
-        if first is not None and first.d > MAX_INDEX_DIM:
-            raise ValueError(
-                f"cannot index {first.d}-d vectors: dimension cap is "
-                f"{MAX_INDEX_DIM} (ivfflat.h:25)"
-            )
-
         if sample_rows is None:
             sample_rows = max(50 * lists, 10_000)  # ivfbuild.cpp sampling scale
-        n = clean.count()
-        fraction = min(1.0, (sample_rows * 1.2) / max(n, 1))
-        sample_df = clean.sample(fraction=fraction, seed=seed) if fraction < 1.0 else clean
-        sample = np.array(
-            [r[0] for r in sample_df.select(as_double(F.col(vec_col))).limit(sample_rows).collect()],
-            dtype=np.float64,
-        )
+        vecs = clean.select(as_double(F.col(vec_col)))
+        # one job when the table fits in the sample: its rows ARE the
+        # sample; a larger table pays count() + a seeded sample
+        rows = vecs.limit(sample_rows + 1).collect()
+        if rows and len(rows[0][0]) > MAX_INDEX_DIM:
+            raise ValueError(
+                f"cannot index {len(rows[0][0])}-d vectors: dimension cap is "
+                f"{MAX_INDEX_DIM} (ivfflat.h:25)"
+            )
+        if len(rows) > sample_rows:
+            n = clean.count()
+            fraction = min(1.0, (sample_rows * 1.2) / n)
+            sample_df = vecs.sample(fraction=fraction, seed=seed) if fraction < 1.0 else vecs
+            rows = sample_df.limit(sample_rows).collect()
+        sample = np.array([r[0] for r in rows], dtype=np.float64)
         # collect order is partition-order nondeterministic → canonicalize
         # so the k-means++ draw (and thus the index) is reproducible
         sample = sample[np.lexsort(sample.T[::-1])]
@@ -283,18 +334,12 @@ class IvfIndex:
         else:
             centroids = _kmeans_fit(sample, lists, seed=seed, max_iter=max_iter)
 
-        # hamming operates on the packed bigint words directly (a double
-        # cast would break the XOR kernel); float metrics accumulate in
-        # double
-        label_vec = (
-            F.col(vec_col).cast("array<bigint>")
-            if metric == "hamming"
-            else as_double(F.col(vec_col))
-        )
         labeled = clean.withColumn(
             "list_id",
             F.explode(
-                assign_lists_expr(label_vec, centroids, metric, spill_epsilon)
+                assign_lists_expr(
+                    label_column(vec_col, metric), centroids, metric, spill_epsilon
+                )
             ),
         )
         (
@@ -304,11 +349,12 @@ class IvfIndex:
             .parquet(os.path.join(path, "data"))
         )
 
-        spark = df.sparkSession
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "list_id INT, centroid ARRAY<DOUBLE>",
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+        (
+            df.sparkSession.range(0, 1, 1, 1)
+            .select(F.posexplode(_matrix_lit(centroids, dlit_sql)).alias("list_id", "centroid"))
+            .write.mode("overwrite")
+            .parquet(os.path.join(path, "centroids"))
+        )
         from ..catalog import invalidate_table_cache
 
         invalidate_table_cache(path)  # rebuilds rewrite in place
@@ -337,10 +383,9 @@ class IvfIndex:
         if self.metric == "hamming":
             from .distance import hamming_distance
 
-            q = F.expr(
-                "array(" + ",".join(f"{int(x)}L" for x in qvec) + ")"
+            d = hamming_distance(
+                F.col("centroid").cast("array<bigint>"), F.expr(llit_sql(qvec))
             )
-            d = hamming_distance(F.col("centroid").cast("array<bigint>"), q)
         else:
             from .distance import dlit_array
 
@@ -381,8 +426,9 @@ class IvfIndex:
         if self.metric == "hamming":
             from .distance import hamming_distance
 
-            q = F.array(*[F.lit(int(x)).cast("long") for x in qvec])
-            d = hamming_distance(F.col(vec_col).cast("array<bigint>"), q)
+            d = hamming_distance(
+                F.col(vec_col).cast("array<bigint>"), F.expr(llit_sql(qvec))
+            )
             out = pruned.filter(F.col(vec_col).isNotNull()).withColumn(
                 "distance", d
             )

@@ -17,8 +17,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .distance import as_double
-from .ivf import IvfIndex, assign_lists_expr
+from .ivf import IvfIndex, assign_lists_expr, label_column
 
 
 def _invalidate(index: IvfIndex) -> None:
@@ -42,10 +41,12 @@ def append_to_index(
     centroids and append them to the partitioned data layout. No existing
     partitions are rewritten — each probe list gains one new file per
     append batch (compact() folds them)."""
+    from ..catalog import parquet_handle
+
     cents = np.array(
         [c for _, c in sorted(
             (r.list_id, list(r.centroid))
-            for r in spark.read.parquet(os.path.join(index.path, "centroids")).collect()
+            for r in parquet_handle(spark, os.path.join(index.path, "centroids")).collect()
         )],
         dtype=np.float64,
     )
@@ -53,7 +54,7 @@ def append_to_index(
         "list_id",
         F.explode(
             assign_lists_expr(
-                as_double(F.col(vec_col)), cents, index.metric, spill_epsilon
+                label_column(vec_col, index.metric), cents, index.metric, spill_epsilon
             )
         ),
     )
